@@ -20,10 +20,13 @@ kilobytes at any input scale. The baseline join is a broadcast.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from anomalydetection_spark.operators.grain import SPANS, Part, fuse
 
 CONSTRAINT = "distribution_drift"
 
@@ -51,6 +54,24 @@ class DriftThresholds:
     max_hellinger: float | None = None
 
 
+def _span_buckets() -> Column:
+    """Per span, an array of struct<grp, key>: its span_kind bucket (NULL
+    kinds kept) and — span_length is undefined for NULL text (media
+    spans) — a NULL entry or its span_length bucket."""
+    # NB: Spark's least() SKIPS nulls (least(NULL, 19) = 19) — null text
+    # must be gated explicitly so media spans don't land in the last bucket
+    len_bucket = F.least(
+        F.floor(F.col("text_len") / F.lit(LENGTH_BUCKET_WIDTH)), F.lit(LENGTH_BUCKET_MAX)
+    ).cast("string")
+    return F.array(
+        F.struct(F.lit("span_kind").alias("grp"), F.col("kind").alias("key")),
+        F.when(
+            F.col("text_len").isNotNull(),
+            F.struct(F.lit("span_length").alias("grp"), len_bucket.alias("key")),
+        ),
+    )
+
+
 def _bucketed(exploded: DataFrame) -> DataFrame:
     """(partition_id, feature, bucket) rows, one per span per feature.
 
@@ -58,25 +79,9 @@ def _bucketed(exploded: DataFrame) -> DataFrame:
     (a union of two selects would scan the span table twice — at 10^12
     spans that doubles the dominant cost of the whole drift check).
     """
-    # NB: Spark's least() SKIPS nulls (least(NULL, 19) = 19) — null text
-    # must be gated explicitly so media spans don't land in the last bucket
-    len_bucket = F.when(
-        F.col("text_len").isNotNull(),
-        F.least(
-            F.floor(F.col("text_len") / F.lit(LENGTH_BUCKET_WIDTH)),
-            F.lit(LENGTH_BUCKET_MAX),
-        ).cast("string"),
-    )
-    pairs = F.array(
-        F.struct(F.lit("span_kind").alias("feature"), F.col("kind").alias("bucket")),
-        F.struct(F.lit("span_length").alias("feature"), len_bucket.alias("bucket")),
-    )
-    return (
-        exploded.select("partition_id", F.explode(pairs).alias("fb"))
-        .select("partition_id", F.col("fb.feature").alias("feature"), F.col("fb.bucket").alias("bucket"))
-        # span_length is undefined for NULL text (media spans) — matches the
-        # two-pass formulation's filter; NULL span_kind rows are kept
-        .filter(~((F.col("feature") == "span_length") & F.col("bucket").isNull()))
+    pairs = F.filter(_span_buckets(), lambda b: b.isNotNull())
+    return exploded.select("partition_id", F.explode(pairs).alias("fb")).select(
+        "partition_id", F.col("fb.grp").alias("feature"), F.col("fb.key").alias("bucket")
     )
 
 
@@ -315,178 +320,108 @@ def ks_js_hellinger(
     )
 
 
+_FEATURES = (("span_kind", "kind"), ("span_length", "length"))
+
+
+def part(baseline: DataFrame, th: DriftThresholds = DriftThresholds()) -> Part:
+    """distribution_drift as a fused-plan part (operators/grain.py).
+
+    Keys: each span contributes its span_kind bucket (NULL kinds kept)
+    and, when its text is non-NULL, its span_length bucket — one pass,
+    counted in the suite's shared keyed aggregate (≤ partitions ×
+    features × buckets rows). The baseline buckets enter the same
+    aggregate as zero-count grid rows per partition, which makes the
+    epsilon-smoothed full outer join of current vs baseline buckets part
+    of the count. The normalizing totals come from the span-grain rows
+    (the kind total is ``n_spans``, the length total the non-NULL
+    ``text_len`` count), and the per-partition aggregate takes KL, PSI
+    and — opt-in — JS/Hellinger as feature-conditional sums; the bounded
+    pair reads the RAW un-smoothed probabilities (its zero-mass terms
+    vanish exactly). With both bounded thresholds unset the output is the
+    KL/PSI-only contract.
+
+    Violations are partition-level (doc_id NULL): one row per
+    (partition, feature) whose scores exceed a threshold."""
+    bounded = th.max_js is not None or th.max_hellinger is not None
+    grid = baseline.select(
+        F.col("feature").alias("grp"), F.col("bucket").alias("key"), F.col("p").alias("q")
+    )
+
+    n = F.col("n")
+    total = F.when(F.col("grp") == "span_kind", F.col("n_spans")).otherwise(F.col("n_tlen"))
+    p0 = F.when(n > 0, n / total).otherwise(F.lit(0.0))
+    q0 = F.coalesce(F.col("q"), F.lit(0.0))
+    p, q = p0 + F.lit(th.epsilon), q0 + F.lit(th.epsilon)
+    terms = {"kl": p * F.log(p / q), "psi": (p - q) * F.log(p / q)}
+    if bounded:
+        m = (p0 + q0) / F.lit(2.0)
+        terms["js"] = F.when(p0 > 0, p0 * F.log(p0 / m)).otherwise(F.lit(0.0)) + F.when(
+            q0 > 0, q0 * F.log(q0 / m)
+        ).otherwise(F.lit(0.0))
+        terms["hellinger"] = (F.sqrt(p0) - F.sqrt(q0)) * (F.sqrt(p0) - F.sqrt(q0))
+    key_aggs = {}
+    for feature, tag in _FEATURES:
+        is_f = F.col("grp") == feature
+        # a sum over no rows is NULL: the feature is absent for the partition
+        sums = {k: F.sum(F.when(is_f, t)) for k, t in terms.items()}
+        if bounded:
+            sums["js"] = F.lit(0.5) * sums["js"]
+            sums["hellinger"] = F.sqrt(F.lit(0.5) * sums["hellinger"])
+        key_aggs.update({f"_drift_{k}_{tag}": c for k, c in sums.items()})
+
+    oks, details = [], []
+    for feature, tag in _FEATURES:
+        s = {k: F.col(f"_drift_{k}_{tag}") for k in ("kl", "psi", "js", "hellinger")}
+        ok = (s["kl"] <= F.lit(th.max_kl)) & (s["psi"] <= F.lit(th.max_psi))
+        if th.max_js is not None:
+            ok = ok & (s["js"] <= F.lit(th.max_js))
+        if th.max_hellinger is not None:
+            ok = ok & (s["hellinger"] <= F.lit(th.max_hellinger))
+        oks.append(ok)  # NULL iff the feature is absent
+        detail = (
+            F.format_string(
+                "drift on %s: kl=%.6f psi=%.6f js=%.6f hellinger=%.6f",
+                F.lit(feature), s["kl"], s["psi"], s["js"], s["hellinger"],
+            )
+            if bounded
+            else F.format_string("drift on %s: kl=%.6f psi=%.6f", F.lit(feature), s["kl"], s["psi"])
+        )
+        details.append(F.when(~ok, detail))
+    vc = reduce(
+        lambda a, b: a + b, [F.when(~ok, 1).otherwise(0) for ok in oks]
+    )
+    metric_keys = ["kl", "psi"] + (["js", "hellinger"] if bounded else [])
+    metrics = {
+        f"{k}_{feature}": F.col(f"_drift_{k}_{tag}")
+        for pair in (metric_keys[:2], metric_keys[2:])
+        for feature, tag in _FEATURES
+        for k in pair
+    }
+    return Part(
+        CONSTRAINT,
+        SPANS,
+        (
+            vc == 0,
+            vc,
+            F.col("n_spans"),
+            F.map_from_arrays(F.array(*[F.lit(k) for k in metrics]), F.array(*metrics.values())),
+        ),
+        span_aggs={"n_tlen": F.count("text_len")},
+        key_rows=F.array_compact(F.array(*details)),
+        key_spans=_span_buckets(),
+        key_grid=lambda parts: parts.crossJoin(F.broadcast(grid)),
+        key_aggs=key_aggs,
+    )
+
+
 def check(
     exploded: DataFrame,
     baseline: DataFrame,
     th: DriftThresholds = DriftThresholds(),
-    persist_scores: bool = True,
-    persist_counts: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """distribution_drift constraint → (verdicts, violations).
-
-    Violations are partition-level (doc_id NULL): one row per
-    (partition, feature) whose KL or PSI — or, when the opt-in bounded
-    thresholds ``max_js`` / ``max_hellinger`` are set, JS divergence or
-    Hellinger distance — exceeds its threshold. The bounded pair rides
-    the SAME smoothed-join frame as extra aggregate columns (no
-    additional scan or shuffle) but reads the raw un-smoothed
-    probabilities; with both unset the output is byte-identical to the
-    KL/PSI-only contract.
-
-    ``persist_scores`` caches the per-(partition, feature) score frame —
-    it is tiny (partitions × 2 rows) but everything upstream of it (the
-    histogram agg over all spans) would otherwise run once for the verdict
-    action and again for the violation action.
-
-    ONE scan of the span table total: the raw bucket counts are persisted
-    (≤ partitions × features × buckets rows — KB at any input scale) and
-    everything else — normalized histograms, the partition list for the
-    baseline cross-join, and the per-partition row counts the verdicts
-    carry — derives from that frame. The naive composition (histograms +
-    a distinct() for partitions + a groupBy for row counts) re-scanned
-    every span three times per run.
-
-    ``persist_counts``: cache the raw bucket counts. Pass False when the
-    caller already caches the exploded view (small inputs): re-deriving
-    the tiny agg from that cache is cheaper than paying another
-    materialization barrier, while at big inputs (exploded re-scanned
-    lazily) the cached counts are what keeps this a one-scan check.
-    """
-    counts = (
-        _bucketed(exploded)
-        .groupBy("partition_id", "feature", "bucket")
-        .agg(F.count("*").alias("n"))
-    )
-    if persist_counts:
-        counts = counts.persist()
-    total = F.sum("n").over(Window.partitionBy("partition_id", "feature"))
-    cur = counts.select(
-        "partition_id", "feature", "bucket", (F.col("n") / total).alias("p")
-    )
-    base = baseline.select("feature", "bucket", F.col("p").alias("q"))
-
-    # full outer per (feature,bucket) within each partition: a partition may
-    # miss baseline buckets and vice versa → epsilon smoothing.
-    parts = counts.select("partition_id").distinct()
-    base_x = parts.crossJoin(F.broadcast(base))
-    # the bounded pair (JS/Hellinger, opt-in) reads the RAW probabilities —
-    # its zero-mass terms vanish exactly, so smoothing would only distort it
-    bounded = th.max_js is not None or th.max_hellinger is not None
-    raw_cols = (
-        [
-            F.coalesce(F.col("p"), F.lit(0.0)).alias("p0"),
-            F.coalesce(F.col("q"), F.lit(0.0)).alias("q0"),
-        ]
-        if bounded
-        else []
-    )
-    joined = base_x.join(cur, ["partition_id", "feature", "bucket"], "full_outer").select(
-        "partition_id",
-        "feature",
-        "bucket",
-        (F.coalesce(F.col("p"), F.lit(0.0)) + F.lit(th.epsilon)).alias("p"),
-        (F.coalesce(F.col("q"), F.lit(0.0)) + F.lit(th.epsilon)).alias("q"),
-        *raw_cols,
-    )
-
-    aggs = [
-        F.sum(F.col("p") * F.log(F.col("p") / F.col("q"))).alias("kl"),
-        F.sum((F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))).alias("psi"),
-    ]
-    if bounded:
-        p0, q0 = F.col("p0"), F.col("q0")
-        m = (p0 + q0) / F.lit(2.0)
-        js_term = F.when(p0 > 0, p0 * F.log(p0 / m)).otherwise(F.lit(0.0)) + F.when(
-            q0 > 0, q0 * F.log(q0 / m)
-        ).otherwise(F.lit(0.0))
-        aggs.append((F.lit(0.5) * F.sum(js_term)).alias("js"))
-        aggs.append(
-            F.sqrt(
-                F.lit(0.5)
-                * F.sum((F.sqrt(p0) - F.sqrt(q0)) * (F.sqrt(p0) - F.sqrt(q0)))
-            ).alias("hellinger")
-        )
-    scores = joined.groupBy("partition_id", "feature").agg(*aggs)
-    ok = (F.col("kl") <= F.lit(th.max_kl)) & (F.col("psi") <= F.lit(th.max_psi))
-    if th.max_js is not None:
-        ok = ok & (F.col("js") <= F.lit(th.max_js))
-    if th.max_hellinger is not None:
-        ok = ok & (F.col("hellinger") <= F.lit(th.max_hellinger))
-    scored = scores.withColumn("ok", ok)
-    if persist_scores:
-        scored = scored.persist()
-
-    detail = (
-        F.format_string(
-            "drift on %s: kl=%.6f psi=%.6f js=%.6f hellinger=%.6f",
-            F.col("feature"),
-            F.col("kl"),
-            F.col("psi"),
-            F.col("js"),
-            F.col("hellinger"),
-        )
-        if bounded
-        else F.format_string(
-            "drift on %s: kl=%.6f psi=%.6f", F.col("feature"), F.col("kl"), F.col("psi")
-        )
-    )
-    violations = scored.filter(~F.col("ok")).select(
-        "partition_id",
-        F.lit(CONSTRAINT).alias("constraint"),
-        F.lit(None).cast("string").alias("doc_id"),
-        F.lit(None).cast("int").alias("pos"),
-        detail.alias("detail"),
-    )
-
-    # every span contributes exactly one span_kind bucket row (NULL kinds
-    # kept), so the kind-feature counts sum to the span count — no second
-    # scan of the span table
-    row_counts = (
-        counts.filter(F.col("feature") == "span_kind")
-        .groupBy("partition_id")
-        .agg(F.sum("n").cast("long").alias("row_count"))
-    )
-    metric_keys = [
-        F.lit("kl_span_kind"), F.lit("psi_span_kind"),
-        F.lit("kl_span_length"), F.lit("psi_span_length"),
-    ]
-    metric_vals = [
-        F.max(F.when(F.col("feature") == "span_kind", F.col("kl"))),
-        F.max(F.when(F.col("feature") == "span_kind", F.col("psi"))),
-        F.max(F.when(F.col("feature") == "span_length", F.col("kl"))),
-        F.max(F.when(F.col("feature") == "span_length", F.col("psi"))),
-    ]
-    if bounded:
-        metric_keys += [
-            F.lit("js_span_kind"), F.lit("hellinger_span_kind"),
-            F.lit("js_span_length"), F.lit("hellinger_span_length"),
-        ]
-        metric_vals += [
-            F.max(F.when(F.col("feature") == "span_kind", F.col("js"))),
-            F.max(F.when(F.col("feature") == "span_kind", F.col("hellinger"))),
-            F.max(F.when(F.col("feature") == "span_length", F.col("js"))),
-            F.max(F.when(F.col("feature") == "span_length", F.col("hellinger"))),
-        ]
-    verdicts = (
-        scored.groupBy("partition_id")
-        .agg(
-            F.bool_and("ok").alias("passed"),
-            F.sum(F.when(~F.col("ok"), 1).otherwise(0)).cast("long").alias("violation_count"),
-            F.map_from_arrays(
-                F.array(*metric_keys), F.array(*metric_vals)
-            ).alias("metrics"),
-        )
-        .join(row_counts, "partition_id", "left")
-        .select(
-            "partition_id",
-            F.lit(CONSTRAINT).alias("constraint"),
-            "passed",
-            "violation_count",
-            F.coalesce(F.col("row_count"), F.lit(0)).cast("long").alias("row_count"),
-            "metrics",
-        )
-    )
-    return verdicts, violations
+    """distribution_drift constraint → (verdicts, violations)."""
+    fused = fuse(None, exploded, [part(baseline, th)])
+    return fused.verdicts, fused.violations
 
 
 # round-6 log10(1 + 1/d) for d = 1..9, computed ONCE here and inlined as

@@ -10,9 +10,9 @@ of the drift checks: distributional, per-partition, threshold-gated.
 
 Exact path (the suite constraint): one hash aggregate per
 (partition_id, media_ref) with map-side partials — the shuffle carries
-|distinct keys| rows, never spans — then per-partition totals are
-REUSED from those counts (a second aggregate over the counts, not a
-second scan). A key is hot when its share of the partition's non-null
+|distinct keys| rows, never spans — while the per-partition ref totals
+come from the suite's span-grain aggregate (operators/grain.py), not a
+second scan. A key is hot when its share of the partition's non-null
 refs exceeds ``max_ref_share``; partitions with fewer than ``min_refs``
 refs are vacuously clean (a 3-ref partition shouldn't fail at 33%).
 
@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anomalydetection_spark.operators.grain import SPANS, Part, fuse
+
 CONSTRAINT = "frequent_items"
 
 MAGIC = b"MG01"
@@ -48,82 +50,76 @@ class FreqThresholds:
     min_refs: int = 50           # partitions with fewer refs are vacuously clean
 
 
+def part(th: FreqThresholds = FreqThresholds()) -> Part:
+    """frequent_items as a fused-plan part (operators/grain.py).
+
+    Keys: every non-NULL media_ref, counted per (partition_id, media_ref)
+    in the suite's shared keyed aggregate — the shuffle carries
+    |distinct keys| rows, never spans. The partition's ref total
+    ``n_refs`` comes from the span-grain rows, so a key's hot test needs
+    no second pass; the per-partition aggregate keeps the max key count
+    and the hot keys themselves (at most 1/max_ref_share of them), which
+    the wide row carries to the verdict and to the key-level violation
+    rows. Every partition with spans gets a verdict, even one with zero
+    refs."""
+    is_ref = F.col("grp") == "media_ref"
+    hot = (
+        is_ref
+        & (F.col("n_refs") >= th.min_refs)
+        & (F.col("n") > th.max_ref_share * F.col("n_refs"))
+    )
+    key_aggs = {
+        "_freq_max_n": F.max(F.when(is_ref, F.col("n"))),
+        "_freq_hot": F.collect_list(
+            F.when(hot, F.struct(F.col("key").alias("media_ref"), F.col("n").alias("n")))
+        ),
+    }
+    hot_keys = F.coalesce(F.col("_freq_hot"), F.array())
+    vc = F.size(hot_keys)
+    n_refs = F.col("n_refs")
+    return Part(
+        CONSTRAINT,
+        SPANS,
+        (
+            vc == 0,
+            vc,
+            n_refs,
+            F.create_map(
+                F.lit("max_ref_share"),
+                F.when(
+                    n_refs > 0, F.coalesce("_freq_max_n", F.lit(0)) / n_refs
+                ).otherwise(F.lit(0.0)),
+            ),
+        ),
+        span_aggs={
+            "n_refs": F.sum(F.when(F.col("media_ref").isNotNull(), 1).otherwise(0)).cast("long")
+        },
+        key_rows=F.transform(
+            hot_keys,
+            lambda h: F.format_string(
+                "hot media_ref=%s count=%d of %d refs", h["media_ref"], h["n"], n_refs
+            ),
+        ),
+        key_spans=F.array(
+            F.when(
+                F.col("media_ref").isNotNull(),
+                F.struct(F.lit("media_ref").alias("grp"), F.col("media_ref").alias("key")),
+            )
+        ),
+        key_aggs=key_aggs,
+    )
+
+
 def check(
-    exploded: DataFrame,
-    th: FreqThresholds = FreqThresholds(),
-    persist_counts: bool = True,
+    exploded: DataFrame, th: FreqThresholds = FreqThresholds()
 ) -> tuple[DataFrame, DataFrame]:
     """frequent_items constraint → (verdicts, violations).
 
     ``exploded`` is the narrow span view (reassembly.explode_spans_meta);
-    only the kind/media_ref leaves are touched, so the parquet scan skips
-    the text leaf entirely (same pruning contract as referential).
-
-    ONE scan of the span table total: NULL media_refs are kept as their
-    own group in the count aggregate, so every partition (even one with
-    zero refs) appears in the counts frame and the former separate
-    ``distinct(partition_id)`` scan folds into the same aggregate. The
-    counts frame (|distinct keys| rows — bounded by key cardinality, the
-    documented exactness domain; unbounded columns take the MG sketch
-    path) is persisted because totals, hot keys, max-share, and both
-    output actions all re-consume it: un-persisted, one verdicts action
-    re-ran the scan+shuffle up to four times. ``persist_counts=False``
-    skips that cache — right when the caller already caches the exploded
-    view (small inputs), where re-aggregating from the cache is cheaper
-    than another materialization barrier."""
-    from pyspark.storagelevel import StorageLevel
-
-    counts_all = exploded.groupBy("partition_id", "media_ref").agg(
-        F.count("*").alias("n")
-    )
-    if persist_counts:
-        counts_all = counts_all.persist(StorageLevel.MEMORY_AND_DISK)
-    counts = counts_all.filter(F.col("media_ref").isNotNull())
-    # totals derived FROM the counts (tiny); the NULL-key group keeps
-    # ref-less partitions present so every partition gets a verdict
-    totals = counts_all.groupBy("partition_id").agg(
-        F.sum(
-            F.when(F.col("media_ref").isNotNull(), F.col("n")).otherwise(F.lit(0))
-        ).alias("n_refs")
-    )
-
-    hot = counts.join(totals, "partition_id").filter(
-        (F.col("n_refs") >= th.min_refs)
-        & (F.col("n") > th.max_ref_share * F.col("n_refs"))
-    )
-
-    violations = hot.select(
-        "partition_id",
-        F.lit(CONSTRAINT).alias("constraint"),
-        F.lit(None).cast("string").alias("doc_id"),  # key-level, not doc-level
-        F.lit(None).cast("int").alias("pos"),
-        F.format_string(
-            "hot media_ref=%s count=%d of %d refs", "media_ref", "n", "n_refs"
-        ).alias("detail"),
-    )
-
-    hot_agg = hot.groupBy("partition_id").agg(
-        F.count("*").cast("long").alias("violation_count")
-    )
-    share_agg = counts.groupBy("partition_id").agg(F.max("n").alias("max_n"))
-    verdicts = (
-        totals.join(share_agg, "partition_id", "left")
-        .join(hot_agg, "partition_id", "left")
-        .select(
-            "partition_id",
-            F.lit(CONSTRAINT).alias("constraint"),
-            (F.coalesce("violation_count", F.lit(0)) == 0).alias("passed"),
-            F.coalesce("violation_count", F.lit(0)).cast("long").alias("violation_count"),
-            F.col("n_refs").cast("long").alias("row_count"),
-            F.create_map(
-                F.lit("max_ref_share"),
-                F.when(
-                    F.col("n_refs") > 0, F.coalesce("max_n", F.lit(0)) / F.col("n_refs")
-                ).otherwise(F.lit(0.0)),
-            ).alias("metrics"),
-        )
-    )
-    return verdicts, violations
+    only the media_ref leaf is touched, so the parquet scan skips the
+    text leaf entirely (same pruning contract as referential)."""
+    fused = fuse(None, exploded, [part(th)])
+    return fused.verdicts, fused.violations
 
 
 # ---------------------------------------------------------------------------

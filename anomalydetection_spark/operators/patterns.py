@@ -21,9 +21,9 @@ fine on a text span and fatal on an image span).
 Both run on the narrow exploded meta view (kind + media_ref leaves only
 — the parquet scan skips the text leaf, same pruning contract as
 referential/frequent_items) and follow the suite's (verdicts,
-violations) shape: one hash aggregate per constraint with map-side
-partials, violation rows bounded by offenders, no extra shuffle of the
-span table.
+violations) shape: a conditional sum in the span-grain aggregate
+(operators/grain.py) and a span tag, violation rows bounded by
+offenders, no extra shuffle of the span table.
 """
 
 from __future__ import annotations
@@ -32,6 +32,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from anomalydetection_spark.operators.grain import SPANS, Part, fuse
 
 PATTERN_CONSTRAINT = "pattern"
 CROSS_CONSTRAINT = "cross_column"
@@ -48,31 +50,31 @@ class PatternThresholds:
     ref_pattern: str = r"^m-[0-9]{5,8}$"
 
 
-def _verdicts(
-    exploded: DataFrame, violations: DataFrame, constraint: str, rate_metric: str
-) -> DataFrame:
-    """Shared verdict rollup: per-partition span totals joined with the
-    constraint's violation counts (the totals aggregate is over the narrow
-    view; the join is |partitions|-sized)."""
-    per_part = exploded.groupBy("partition_id").agg(
-        F.count("*").cast("long").alias("n_spans")
-    )
-    viol_per_part = violations.groupBy("partition_id").agg(
-        F.count("*").cast("long").alias("violation_count")
-    )
-    return per_part.join(viol_per_part, "partition_id", "left").select(
-        "partition_id",
-        F.lit(constraint).alias("constraint"),
-        (F.coalesce("violation_count", F.lit(0)) == 0).alias("passed"),
-        F.coalesce("violation_count", F.lit(0)).cast("long").alias("violation_count"),
-        F.col("n_spans").alias("row_count"),
+def _rate_verdict(count_col: str, rate_metric: str) -> tuple:
+    """(passed, violation_count, row_count, metrics) of a per-span
+    predicate constraint: its violations over the partition's spans."""
+    vc = F.col(count_col)
+    return (
+        vc == 0,
+        vc,
+        F.col("n_spans"),
         F.create_map(
             F.lit(rate_metric),
-            F.when(
-                F.col("n_spans") > 0,
-                F.coalesce("violation_count", F.lit(0)) / F.col("n_spans"),
-            ).otherwise(F.lit(0.0)),
-        ).alias("metrics"),
+            F.when(F.col("n_spans") > 0, vc / F.col("n_spans")).otherwise(F.lit(0.0)),
+        ),
+    )
+
+
+def pattern_part(th: PatternThresholds = PatternThresholds()) -> Part:
+    """pattern as a fused-plan part (operators/grain.py): non-null
+    media_refs failing the format regex."""
+    bad = F.col("media_ref").isNotNull() & ~F.col("media_ref").rlike(th.ref_pattern)
+    return Part(
+        PATTERN_CONSTRAINT,
+        SPANS,
+        _rate_verdict("n_malformed", "malformed_ref_rate"),
+        span_aggs={"n_malformed": F.sum(F.when(bad, 1).otherwise(0)).cast("long")},
+        span_tag=(bad, F.concat(F.lit("malformed media_ref="), F.col("media_ref"))),
     )
 
 
@@ -81,17 +83,8 @@ def pattern_check(
 ) -> tuple[DataFrame, DataFrame]:
     """pattern constraint → (verdicts, violations): non-null media_refs
     failing the format regex become violation rows."""
-    bad = exploded.filter(
-        F.col("media_ref").isNotNull() & ~F.col("media_ref").rlike(th.ref_pattern)
-    )
-    violations = bad.select(
-        "partition_id",
-        F.lit(PATTERN_CONSTRAINT).alias("constraint"),
-        "doc_id",
-        F.col("pos").cast("int").alias("pos"),
-        F.concat(F.lit("malformed media_ref="), F.col("media_ref")).alias("detail"),
-    )
-    return _verdicts(exploded, violations, PATTERN_CONSTRAINT, "malformed_ref_rate"), violations
+    fused = fuse(None, exploded, [pattern_part(th)])
+    return fused.verdicts, fused.violations
 
 
 def _inconsistent(kind: Column, media_ref: Column) -> Column:
@@ -106,10 +99,9 @@ def _inconsistent(kind: Column, media_ref: Column) -> Column:
     )
 
 
-def cross_column_check(exploded: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """cross_column constraint → (verdicts, violations): kind-vs-media_ref
-    consistency plus the kind domain check."""
-    bad = exploded.filter(_inconsistent(F.col("kind"), F.col("media_ref")))
+def cross_column_part() -> Part:
+    """cross_column as a fused-plan part (operators/grain.py):
+    kind-vs-media_ref consistency plus the kind domain check."""
     detail = (
         F.when(
             F.col("kind").isNull() | ~F.col("kind").isin(*KIND_DOMAIN),
@@ -129,14 +121,21 @@ def cross_column_check(exploded: DataFrame) -> tuple[DataFrame, DataFrame]:
             )
         )
     )
-    violations = bad.select(
-        "partition_id",
-        F.lit(CROSS_CONSTRAINT).alias("constraint"),
-        "doc_id",
-        F.col("pos").cast("int").alias("pos"),
-        detail.alias("detail"),
+    bad = _inconsistent(F.col("kind"), F.col("media_ref"))
+    return Part(
+        CROSS_CONSTRAINT,
+        SPANS,
+        _rate_verdict("n_inconsistent", "inconsistent_rate"),
+        span_aggs={"n_inconsistent": F.sum(F.when(bad, 1).otherwise(0)).cast("long")},
+        span_tag=(bad, detail),
     )
-    return _verdicts(exploded, violations, CROSS_CONSTRAINT, "inconsistent_rate"), violations
+
+
+def cross_column_check(exploded: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """cross_column constraint → (verdicts, violations): kind-vs-media_ref
+    consistency plus the kind domain check."""
+    fused = fuse(None, exploded, [cross_column_part()])
+    return fused.verdicts, fused.violations
 
 
 def fused_check(
@@ -147,103 +146,24 @@ def fused_check(
     """pattern + cross_column in ONE scan of the span table.
 
     Run separately, each constraint scans the narrow meta view twice (its
-    violation filter and its per-partition totals) — four scans for two
-    per-span predicate checks. Here one pass emits a tagged violation
-    array per span (explode drops clean spans), the frame is persisted
-    (violation-bounded, not span-bounded), and BOTH constraints' violation
-    sets, violation counts, and the shared per-partition span totals
-    derive from it plus one totals aggregate — two scans total, and the
-    outputs are row-identical to the per-constraint builders (suite
-    hash-pinned by the flagship oracle).
+    violation filter and its per-partition totals). Here both share one
+    span-grain aggregate (two conditional sums) and one tagged pass whose
+    violation frame is persisted when ``persist`` (violation-bounded, not
+    span-bounded), so both constraints' violation sets filter the same
+    cached rows. Outputs are row-identical to the per-constraint builders.
 
     Returns {constraint: (verdicts, violations)}.
     """
-    pat_bad = F.col("media_ref").isNotNull() & ~F.col("media_ref").rlike(th.ref_pattern)
-    pat_detail = F.concat(F.lit("malformed media_ref="), F.col("media_ref"))
-    cross_bad = _inconsistent(F.col("kind"), F.col("media_ref"))
-    cross_detail = (
-        F.when(
-            F.col("kind").isNull() | ~F.col("kind").isin(*KIND_DOMAIN),
-            F.concat(F.lit("unknown kind="), F.coalesce("kind", F.lit("NULL"))),
-        )
-        .when(
-            F.col("media_ref").isNull(),
-            F.concat(F.lit("media span missing media_ref (kind="), "kind", F.lit(")")),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("text span carries media_ref="),
-                "media_ref",
-                F.lit(" (kind="),
-                "kind",
-                F.lit(")"),
-            )
-        )
-    )
-    tags = F.filter(
-        F.array(
-            F.when(
-                pat_bad,
-                F.struct(
-                    F.lit(PATTERN_CONSTRAINT).alias("constraint"),
-                    pat_detail.alias("detail"),
-                ),
-            ),
-            F.when(
-                cross_bad,
-                F.struct(
-                    F.lit(CROSS_CONSTRAINT).alias("constraint"),
-                    cross_detail.alias("detail"),
-                ),
-            ),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    both = exploded.select(
-        "partition_id",
-        "doc_id",
-        F.col("pos").cast("int").alias("pos"),
-        F.explode(tags).alias("_t"),
-    ).select(
-        "partition_id",
-        F.col("_t.constraint").alias("constraint"),
-        "doc_id",
-        "pos",
-        F.col("_t.detail").alias("detail"),
-    )
+    fused = fuse(None, exploded, [pattern_part(th), cross_column_part()])
+    both = fused.violations
     if persist:
         from pyspark.storagelevel import StorageLevel
 
         both = both.persist(StorageLevel.MEMORY_AND_DISK)
-
-    totals = exploded.groupBy("partition_id").agg(
-        F.count("*").cast("long").alias("n_spans")
-    )
-    if persist:
-        totals = totals.persist()
-
-    out: dict[str, tuple[DataFrame, DataFrame]] = {}
-    for constraint, rate_metric in (
-        (PATTERN_CONSTRAINT, "malformed_ref_rate"),
-        (CROSS_CONSTRAINT, "inconsistent_rate"),
-    ):
-        viol = both.filter(F.col("constraint") == constraint)
-        viol_per_part = viol.groupBy("partition_id").agg(
-            F.count("*").cast("long").alias("violation_count")
+    return {
+        c: (
+            fused.verdicts.filter(F.col("constraint") == c),
+            both.filter(F.col("constraint") == c),
         )
-        verdicts = totals.join(viol_per_part, "partition_id", "left").select(
-            "partition_id",
-            F.lit(constraint).alias("constraint"),
-            (F.coalesce("violation_count", F.lit(0)) == 0).alias("passed"),
-            F.coalesce("violation_count", F.lit(0)).cast("long").alias("violation_count"),
-            F.col("n_spans").alias("row_count"),
-            F.create_map(
-                F.lit(rate_metric),
-                F.when(
-                    F.col("n_spans") > 0,
-                    F.coalesce("violation_count", F.lit(0)) / F.col("n_spans"),
-                ).otherwise(F.lit(0.0)),
-            ).alias("metrics"),
-        )
-        out[constraint] = (verdicts, viol)
-    return out
+        for c in (PATTERN_CONSTRAINT, CROSS_CONSTRAINT)
+    }

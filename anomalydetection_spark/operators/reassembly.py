@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anomalydetection_spark.operators.grain import DOCS, Part, fuse
+
 CONSTRAINT = "span_order"
 
 
@@ -152,71 +154,39 @@ def sorted_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-def check(docs: DataFrame, share_violations: bool = False) -> tuple[DataFrame, DataFrame]:
-    """span_order constraint → (verdicts, violations).
-
-    ``share_violations``: persist the violation rows and derive the
-    verdict counts from them + a plain per-partition row count — the
-    permutation check (array_sort + sequence compare per doc) then runs
-    once instead of once per action.
+def part() -> Part:
+    """span_order as a fused-plan part (operators/grain.py).
 
     A doc violates iff its offsets are not exactly a permutation of
     0..n_spans-1 (nulls, duplicates, gaps). Reversed-but-complete offsets
     are VALID (order is recoverable); the reference's positional pipeline
     would silently corrupt those — this engine reorders them.
 
-    Single narrow pass: the permutation test is pure array arithmetic on
-    the spans column (no explode, no shuffle except the final per-partition
-    count agg).
-    """
+    The permutation test is pure array arithmetic on the spans column (no
+    explode): a conditional sum in the doc-grain aggregate counts the
+    violators, a doc tag emits them."""
     # spans.offset (GetArrayStructFields) instead of transform(spans, …):
     # nested pruning reaches through the field extraction, so this check's
     # parquet scan reads ONLY the offset leaf — not kind/text/media_ref
     offsets = F.col("spans.offset")
     is_perm = F.array_sort(offsets) == F.sequence(F.lit(0), F.size(offsets) - 1)
-    checked = docs.select(
-        "doc_id",
-        "partition_id",
-        F.when(F.size(offsets) == 0, F.lit(True)).otherwise(is_perm).alias("ok"),
+    ok = F.when(F.size(offsets) == 0, F.lit(True)).otherwise(is_perm)
+    vc = F.col("n_order_bad")
+    return Part(
+        CONSTRAINT,
+        DOCS,
+        (
+            vc == 0,
+            vc,
+            F.col("n_docs"),
+            F.create_map(F.lit("violation_rate"), vc / F.col("n_docs")),
+        ),
+        doc_aggs={"n_order_bad": F.sum(F.when(~ok, 1).otherwise(0)).cast("long")},
+        doc_tag=(~ok, F.lit("offsets are not a permutation of 0..n-1")),
     )
 
-    violations = checked.filter(~F.col("ok")).select(
-        "partition_id",
-        F.lit(CONSTRAINT).alias("constraint"),
-        "doc_id",
-        F.lit(None).cast("int").alias("pos"),
-        F.lit("offsets are not a permutation of 0..n-1").alias("detail"),
-    )
 
-    if share_violations:
-        from pyspark.storagelevel import StorageLevel
-
-        violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
-        rows = docs.groupBy("partition_id").agg(F.count("*").cast("long").alias("row_count"))
-        bad = violations.groupBy("partition_id").agg(
-            F.count("*").cast("long").alias("violation_count")
-        )
-        verdicts = rows.join(bad, "partition_id", "left").select(
-            "partition_id",
-            F.lit(CONSTRAINT).alias("constraint"),
-            (F.coalesce(F.col("violation_count"), F.lit(0)) == 0).alias("passed"),
-            F.coalesce(F.col("violation_count"), F.lit(0)).cast("long").alias("violation_count"),
-            "row_count",
-            F.create_map(
-                F.lit("violation_rate"),
-                F.coalesce(F.col("violation_count"), F.lit(0)) / F.col("row_count"),
-            ).alias("metrics"),
-        )
-        return verdicts, violations
-
-    verdicts = checked.groupBy("partition_id").agg(
-        F.lit(CONSTRAINT).alias("constraint"),
-        F.bool_and("ok").alias("passed"),
-        F.sum(F.when(~F.col("ok"), 1).otherwise(0)).cast("long").alias("violation_count"),
-        F.count("*").cast("long").alias("row_count"),
-        F.create_map(
-            F.lit("violation_rate"),
-            F.avg(F.when(~F.col("ok"), 1.0).otherwise(0.0)),
-        ).alias("metrics"),
-    )
-    return verdicts, violations
+def check(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """span_order constraint → (verdicts, violations)."""
+    fused = fuse(docs, None, [part()])
+    return fused.verdicts, fused.violations

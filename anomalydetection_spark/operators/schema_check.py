@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from anomalydetection_spark.operators.grain import PARTS, Part, fuse
+
 CONSTRAINT = "schema"
 
 # lossless widenings accepted in compatible mode (actual → expected)
@@ -124,6 +126,31 @@ def relax_nullability(schema: T.DataType) -> T.DataType:
     return schema
 
 
+def part(
+    actual_schema: T.StructType,
+    expected_schema: T.StructType,
+    th: SchemaThresholds = SchemaThresholds(),
+) -> Part:
+    """schema as a fused-plan part (operators/grain.py): the structural
+    diff runs driver-side, so the verdict and the issue list are literals
+    fanned out over the partition rows — no aggregate of its own."""
+    issues = diff_schemas(actual_schema, expected_schema, th.mode)
+    return Part(
+        CONSTRAINT,
+        PARTS,
+        (
+            F.lit(not issues),
+            F.lit(len(issues)),
+            F.lit(0),
+            F.create_map(
+                F.lit("n_issues"), F.lit(float(len(issues))),
+                F.lit("strict"), F.lit(1.0 if th.mode == "strict" else 0.0),
+            ),
+        ),
+        key_rows=F.array(*[F.lit(s) for s in issues]) if issues else None,
+    )
+
+
 def check(
     docs: DataFrame,
     expected_schema: T.StructType,
@@ -137,39 +164,8 @@ def check(
     per-partition writes and the rollup keep working; row_count is 0 —
     the check reads metadata, never rows. Violations carry one row per
     structural issue per partition (|partitions|·|issues|-bounded)."""
-    issues = diff_schemas(docs.schema, expected_schema, th.mode)
-    spark = docs.sparkSession
-    parts = (
-        expected_partitions.select("partition_id").distinct()
-        if expected_partitions is not None
-        else docs.select("partition_id").distinct()
-    )
-    ok = len(issues) == 0
-    verdicts = parts.select(
-        "partition_id",
-        F.lit(CONSTRAINT).alias("constraint"),
-        F.lit(ok).alias("passed"),
-        F.lit(len(issues)).cast("long").alias("violation_count"),
-        F.lit(0).cast("long").alias("row_count"),
-        F.create_map(
-            F.lit("n_issues"), F.lit(float(len(issues))),
-            F.lit("strict"), F.lit(1.0 if th.mode == "strict" else 0.0),
-        ).alias("metrics"),
-    )
-    if ok:
-        violations = spark.createDataFrame(
-            [], "partition_id int, constraint string, doc_id string, pos int, detail string"
-        )
-    else:
-        issue_df = spark.createDataFrame([(s,) for s in issues], "detail string")
-        violations = parts.crossJoin(issue_df).select(
-            "partition_id",
-            F.lit(CONSTRAINT).alias("constraint"),
-            F.lit(None).cast("string").alias("doc_id"),
-            F.lit(None).cast("int").alias("pos"),
-            "detail",
-        )
-    return verdicts, violations
+    fused = fuse(docs, None, [part(docs.schema, expected_schema, th)], expected_partitions)
+    return fused.verdicts, fused.violations
 
 
 def conform(df: DataFrame, expected_schema: T.StructType, mode: str = "compatible") -> DataFrame:

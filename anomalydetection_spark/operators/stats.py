@@ -25,6 +25,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anomalydetection_spark.operators.grain import DOCS, Part, fuse
+
 CONSTRAINT = "column_stats"
 
 
@@ -43,35 +45,24 @@ class StatsThresholds:
     collect_moments: bool = False
 
 
-def check(
-    docs: DataFrame,
-    exploded: DataFrame,  # the narrow meta view (reassembly.explode_spans_meta)
-    th: StatsThresholds = StatsThresholds(),
-    share_violations: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """column_stats constraint → (verdicts, violations).
+_MOMENT_COLS = ("_mom_n", "_mom_s1", "_mom_s2", "_mom_s3", "_mom_s4")
 
-    ``share_violations``: persist the violation rows and derive the
-    verdicts' ``n_null_text`` from THEM (a per-partition count join)
-    instead of an inline conditional sum — the verdict action then
-    materializes the persisted frame, so the separate violations action
-    reuses it rather than re-scanning the span table (one fewer pass over
-    the fat text leaf per suite run; identical values either way)."""
-    # --- doc-level single-pass agg ---------------------------------------
+
+def part(th: StatsThresholds = StatsThresholds()) -> Part:
+    """column_stats as a fused-plan part (operators/grain.py): doc-level
+    aggregates over the doc grain, span-level ones over the narrow meta
+    view (text_len is NULL iff text is NULL, so null-rate and length
+    stats need no raw string bytes)."""
     # span count via the offset leaf (same length as spans; nested pruning
     # then reads one int leaf instead of the whole struct incl. text)
     n_spans_arr = F.size(F.col("spans.offset"))
-    doc_stats = docs.groupBy("partition_id").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.avg(F.when(n_spans_arr == 0, 1.0).otherwise(0.0)).alias("empty_spans_rate"),
-        F.avg(n_spans_arr).alias("spans_per_doc_mean"),
-        F.max(n_spans_arr).cast("double").alias("spans_per_doc_max"),
-    )
-
-    # --- span-level single-pass agg (over the narrow meta view: text_len
-    # is NULL iff text is NULL, so null-rate and length stats need no raw
-    # string bytes) ------------------------------------------------------
+    doc_aggs = {
+        "empty_spans_rate": F.avg(F.when(n_spans_arr == 0, 1.0).otherwise(0.0)),
+        "spans_per_doc_mean": F.avg(n_spans_arr),
+        "spans_per_doc_max": F.max(n_spans_arr).cast("double"),
+    }
     texty = F.col("kind").isin("text", "code")
+    null_text = texty & F.col("text_len").isNull()
     tlen = F.col("text_len").cast("double")
     if th.exact_quantiles:
         p50 = F.expr("percentile(text_len, 0.5)")
@@ -79,96 +70,77 @@ def check(
     else:
         p50 = F.expr("percentile_approx(text_len, 0.5, 10000)").cast("double")
         p95 = F.expr("percentile_approx(text_len, 0.95, 10000)").cast("double")
-
-    violations = exploded.filter(texty & F.col("text_len").isNull()).select(
-        "partition_id",
-        F.lit(CONSTRAINT).alias("constraint"),
-        "doc_id",
-        F.col("pos").cast("int").alias("pos"),
-        F.concat(F.lit("null text on kind="), F.col("kind")).alias("detail"),
-    )
-    if share_violations:
-        from pyspark.storagelevel import StorageLevel
-
-        violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
-        null_counts = violations.groupBy("partition_id").agg(
-            F.count("*").cast("long").alias("n_null_text")
-        )
-
-    agg_null_text = (
-        F.sum(F.when(texty & F.col("text_len").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_null_text")
-    )
-    moment_aggs = []
+    span_aggs = {
+        "n_texty": F.sum(F.when(texty, 1).otherwise(0)).cast("long"),
+        "n_null_text": F.sum(F.when(null_text, 1).otherwise(0)).cast("long"),
+        "text_len_mean": F.avg(tlen),
+        "text_len_std": F.stddev(tlen),
+        "text_len_min": F.min(tlen),
+        "text_len_max": F.max(tlen),
+        "text_len_p50": p50,
+        "text_len_p95": p95,
+        "media_ref_approx_distinct": F.approx_count_distinct("media_ref").cast("double"),
+    }
     if th.collect_moments:
         from anomalydetection_spark.operators.moments import power_sum_aggs
 
-        moment_aggs = power_sum_aggs("text_len", "_mom_")
-    span_stats = exploded.groupBy("partition_id").agg(
-        F.count("*").cast("long").alias("n_spans"),
-        F.sum(F.when(texty, 1).otherwise(0)).cast("long").alias("n_texty"),
-        *([] if share_violations else [agg_null_text]),
-        F.avg(tlen).alias("text_len_mean"),
-        F.stddev(tlen).alias("text_len_std"),
-        F.min(tlen).alias("text_len_min"),
-        F.max(tlen).alias("text_len_max"),
-        p50.alias("text_len_p50"),
-        p95.alias("text_len_p95"),
-        F.approx_count_distinct("media_ref").cast("double").alias("media_ref_approx_distinct"),
-        *moment_aggs,
-    )
+        span_aggs.update(zip(_MOMENT_COLS, power_sum_aggs("text_len", "_mom_")))
 
-    joined = doc_stats.join(span_stats, "partition_id", "left")
-    if share_violations:
-        joined = joined.join(null_counts, "partition_id", "left").withColumn(
-            "n_null_text", F.coalesce(F.col("n_null_text"), F.lit(0)).cast("long")
-        )
     null_text_rate = F.when(
         F.col("n_texty") > 0, F.col("n_null_text") / F.col("n_texty")
     ).otherwise(F.lit(0.0))
-
     passed = (
         (F.col("n_docs") >= F.lit(th.min_rows))
         & (F.col("empty_spans_rate") <= F.lit(th.max_empty_spans_rate))
         & (null_text_rate <= F.lit(th.max_null_text_rate))
     )
-
-    metric_keys = [
-        F.lit("n_docs"), F.lit("n_spans"), F.lit("empty_spans_rate"),
-        F.lit("spans_per_doc_mean"), F.lit("spans_per_doc_max"),
-        F.lit("null_text_rate"), F.lit("text_len_mean"), F.lit("text_len_std"),
-        F.lit("text_len_min"), F.lit("text_len_max"),
-        F.lit("text_len_p50"), F.lit("text_len_p95"),
-        F.lit("media_ref_approx_distinct"),
-    ]
-    metric_vals = [
-        F.col("n_docs").cast("double"), F.col("n_spans").cast("double"),
-        F.col("empty_spans_rate"), F.col("spans_per_doc_mean"),
-        F.col("spans_per_doc_max"), null_text_rate,
-        F.col("text_len_mean"), F.col("text_len_std"),
-        F.col("text_len_min"), F.col("text_len_max"),
-        F.col("text_len_p50"), F.col("text_len_p95"),
-        F.col("media_ref_approx_distinct"),
-    ]
+    metrics = {
+        "n_docs": F.col("n_docs").cast("double"),
+        "n_spans": F.col("n_spans").cast("double"),
+        "empty_spans_rate": F.col("empty_spans_rate"),
+        "spans_per_doc_mean": F.col("spans_per_doc_mean"),
+        "spans_per_doc_max": F.col("spans_per_doc_max"),
+        "null_text_rate": null_text_rate,
+        **{
+            k: F.col(k)
+            for k in (
+                "text_len_mean", "text_len_std", "text_len_min", "text_len_max",
+                "text_len_p50", "text_len_p95", "media_ref_approx_distinct",
+            )
+        },
+    }
     if th.collect_moments:
         from anomalydetection_spark.operators.moments import shape_cols
 
         shapes = shape_cols("_mom_")
-        metric_keys += [F.lit("text_len_skewness"), F.lit("text_len_kurtosis")]
-        metric_vals += [shapes["skewness"], shapes["kurtosis"]]
-    verdicts = joined.select(
-        "partition_id",
-        F.lit(CONSTRAINT).alias("constraint"),
-        passed.alias("passed"),
-        F.coalesce(F.col("n_null_text"), F.lit(0)).cast("long").alias("violation_count"),
-        F.col("n_docs").cast("long").alias("row_count"),
-        F.map_from_arrays(
-            F.array(*metric_keys), F.array(*metric_vals)
-        ).alias("metrics"),
+        metrics["text_len_skewness"] = shapes["skewness"]
+        metrics["text_len_kurtosis"] = shapes["kurtosis"]
+    return Part(
+        CONSTRAINT,
+        DOCS,
+        (
+            passed,
+            F.coalesce(F.col("n_null_text"), F.lit(0)),
+            F.col("n_docs"),
+            F.map_from_arrays(
+                F.array(*[F.lit(k) for k in metrics]), F.array(*metrics.values())
+            ),
+        ),
+        doc_aggs=doc_aggs,
+        span_aggs=span_aggs,
+        span_tag=(null_text, F.concat(F.lit("null text on kind="), F.col("kind"))),
     )
 
-    return verdicts, violations
+
+def check(
+    docs: DataFrame,
+    exploded: DataFrame,  # the narrow meta view (reassembly.explode_spans_meta)
+    th: StatsThresholds = StatsThresholds(),
+) -> tuple[DataFrame, DataFrame]:
+    """column_stats constraint → (verdicts, violations): one hash
+    aggregate per level, violations are the NULL-text text/code spans."""
+    fused = fuse(docs, exploded, [part(th)])
+    return fused.verdicts, fused.violations
 
 
 def mad_outliers(

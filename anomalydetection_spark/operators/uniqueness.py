@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anomalydetection_spark.operators.grain import DOCS, Part, fuse
+
 CONSTRAINT = "uniqueness"
 
 
@@ -73,16 +75,45 @@ def duplicate_keys(docs: DataFrame, n_salts: int = 16) -> DataFrame:
     return final.filter(F.col("n") > 1)
 
 
+def part(scope_docs: DataFrame, n_salts: int = 16) -> Part:
+    """uniqueness as a fused-plan part (operators/grain.py): the salted
+    duplicate set over ``scope_docs`` is broadcast-joined onto the doc
+    view by ``doc_id``, so the doc-grain aggregate counts each
+    partition's duplicate rows and the doc-level tagged pass emits them.
+    The dup-key set is small relative to the table (it's a *constraint*
+    violation), which is what makes the broadcast safe."""
+    dups = duplicate_keys(scope_docs, n_salts=n_salts).select(
+        "doc_id", F.col("n").alias("_dup_n")
+    )
+    is_dup = F.col("_dup_n").isNotNull()
+    vc = F.col("n_dup_rows")
+    return Part(
+        CONSTRAINT,
+        DOCS,
+        (
+            vc == 0,
+            vc,
+            F.col("n_docs"),
+            F.create_map(F.lit("duplicate_row_rate"), vc / F.col("n_docs")),
+        ),
+        doc_aggs={"n_dup_rows": F.sum(F.when(is_dup, 1).otherwise(0)).cast("long")},
+        doc_tag=(
+            is_dup,
+            F.concat(
+                F.lit("doc_id occurs "), F.col("_dup_n").cast("string"), F.lit(" times")
+            ),
+        ),
+        doc_lookup=("doc_id", dups),
+    )
+
+
 def check(
     docs: DataFrame, n_salts: int = 16, scope_docs: DataFrame | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """uniqueness constraint → (verdicts, violations).
 
     Violation rows carry the partition the offending row lives in, so the
-    per-partition verdict counts every physical duplicate row. The dup-key
-    set is small relative to the table (it's a *constraint* violation), so
-    attaching partition context is a broadcast-friendly semi-join back —
-    Catalyst/AQE picks broadcast once the dup side fits the threshold.
+    per-partition verdict counts every physical duplicate row.
 
     ``scope_docs``: the table over which duplicate *detection* runs
     (defaults to ``docs``). A resumed run passes the FULL table here while
@@ -90,37 +121,9 @@ def check(
     so a duplicate spanning a done and a pending partition must still be
     flagged in the pending partition's verdict.
     """
-    dups = duplicate_keys(scope_docs if scope_docs is not None else docs, n_salts=n_salts)
-
-    viol_src = docs.join(
-        F.broadcast(dups.select("doc_id", "n")), "doc_id", "inner"
-    )
-    violations = viol_src.select(
-        "partition_id",
-        F.lit(CONSTRAINT).alias("constraint"),
-        "doc_id",
-        F.lit(None).cast("int").alias("pos"),
-        F.concat(F.lit("doc_id occurs "), F.col("n").cast("string"), F.lit(" times")).alias(
-            "detail"
-        ),
-    )
-
-    per_part = docs.groupBy("partition_id").agg(F.count("*").cast("long").alias("row_count"))
-    viol_per_part = violations.groupBy("partition_id").agg(
-        F.count("*").cast("long").alias("violation_count")
-    )
-    verdicts = per_part.join(viol_per_part, "partition_id", "left").select(
-        "partition_id",
-        F.lit(CONSTRAINT).alias("constraint"),
-        (F.coalesce(F.col("violation_count"), F.lit(0)) == 0).alias("passed"),
-        F.coalesce(F.col("violation_count"), F.lit(0)).cast("long").alias("violation_count"),
-        "row_count",
-        F.create_map(
-            F.lit("duplicate_row_rate"),
-            F.coalesce(F.col("violation_count"), F.lit(0)) / F.col("row_count"),
-        ).alias("metrics"),
-    )
-    return verdicts, violations
+    scope = scope_docs if scope_docs is not None else docs
+    fused = fuse(docs, None, [part(scope, n_salts)])
+    return fused.verdicts, fused.violations
 
 
 def fd_audit(df: DataFrame, determinant: str, dependent: str) -> DataFrame:

@@ -31,6 +31,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anomalydetection_spark.operators.grain import PARTS, Part, fuse, n_rows
+
 CONSTRAINT = "volume"
 
 
@@ -40,56 +42,45 @@ class VolumeThresholds:
     max_docs: int | None = None
 
 
+def part(th: VolumeThresholds = VolumeThresholds()) -> Part:
+    """volume as a fused-plan part (operators/grain.py): reads only the
+    doc grain's ``n_docs``; its rows cover the expected partition list
+    when one is given (an absent partition counts n_docs=0).
+
+    Violations are PARTITION-level (doc_id/pos NULL, like frequent_items'
+    hot-key rows): one row per out-of-bounds partition, so the violation
+    sink stays |partitions|-bounded however wrong the counts are."""
+    n = F.coalesce(F.col("n_docs"), F.lit(0)).cast("long")
+    ok = n >= F.lit(int(th.min_docs))
+    if th.max_docs is not None:
+        ok = ok & (n <= F.lit(int(th.max_docs)))
+    hi = "inf" if th.max_docs is None else str(int(th.max_docs))
+    detail = F.format_string(
+        "partition volume %d outside [%d, %s]", n, F.lit(int(th.min_docs)), F.lit(hi)
+    )
+    return Part(
+        CONSTRAINT,
+        PARTS,
+        (
+            ok,
+            F.when(ok, F.lit(0)).otherwise(F.lit(1)),
+            n,
+            F.create_map(
+                F.lit("n_docs"), n.cast("double"),
+                F.lit("min_docs"), F.lit(float(th.min_docs)),
+                F.lit("max_docs"), F.lit(float(th.max_docs) if th.max_docs is not None else float("inf")),
+            ),
+        ),
+        doc_aggs={"n_docs": n_rows()},
+        key_rows=F.array_compact(F.array(F.when(~ok, detail))),
+    )
+
+
 def check(
     docs: DataFrame,
     th: VolumeThresholds = VolumeThresholds(),
     expected_partitions: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """volume constraint → (verdicts, violations).
-
-    Violations are PARTITION-level (doc_id/pos NULL, like frequent_items'
-    hot-key rows): one row per out-of-bounds partition, so the violation
-    sink stays |partitions|-bounded however wrong the counts are.
-    """
-    counts = docs.groupBy("partition_id").agg(
-        F.count("*").cast("long").alias("n_docs")
-    )
-    if expected_partitions is not None:
-        counts = (
-            expected_partitions.select("partition_id")
-            .distinct()
-            .join(counts, "partition_id", "left")
-            .select(
-                "partition_id",
-                F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
-            )
-        )
-    ok = F.col("n_docs") >= F.lit(int(th.min_docs))
-    if th.max_docs is not None:
-        ok = ok & (F.col("n_docs") <= F.lit(int(th.max_docs)))
-    hi = "inf" if th.max_docs is None else str(int(th.max_docs))
-    verdicts = counts.select(
-        "partition_id",
-        F.lit(CONSTRAINT).alias("constraint"),
-        ok.alias("passed"),
-        F.when(ok, F.lit(0)).otherwise(F.lit(1)).cast("long").alias("violation_count"),
-        F.col("n_docs").alias("row_count"),
-        F.create_map(
-            F.lit("n_docs"), F.col("n_docs").cast("double"),
-            F.lit("min_docs"), F.lit(float(th.min_docs)),
-            F.lit("max_docs"), F.lit(float(th.max_docs) if th.max_docs is not None else float("inf")),
-        ).alias("metrics"),
-    )
-    violations = verdicts.filter(~F.col("passed")).select(
-        "partition_id",
-        F.lit(CONSTRAINT).alias("constraint"),
-        F.lit(None).cast("string").alias("doc_id"),
-        F.lit(None).cast("int").alias("pos"),
-        F.format_string(
-            "partition volume %d outside [%d, %s]",
-            F.col("row_count"),
-            F.lit(int(th.min_docs)),
-            F.lit(hi),
-        ).alias("detail"),
-    )
-    return verdicts, violations
+    """volume constraint → (verdicts, violations)."""
+    fused = fuse(docs, None, [part(th)], expected_partitions)
+    return fused.verdicts, fused.violations

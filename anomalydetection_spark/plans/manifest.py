@@ -640,6 +640,7 @@ class ResumableValidator:
         # violation rows behind it. Delete those directories explicitly:
         # driver-side, |validated-and-clean|-bounded, idempotent.
         rollup_collected = res.partition_rollup.collect()
+        res.release()
         jvm = self.spark._jvm  # noqa: SLF001
         hconf = self.spark._jsc.hadoopConfiguration()  # noqa: SLF001
         for r in rollup_collected:

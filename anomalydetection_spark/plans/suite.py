@@ -1,19 +1,36 @@
 """ValidationSuite — the engine's top-level plan builder.
 
-Composes the constraint operators (stats, uniqueness, referential, drift,
-frequent_items, pattern, cross_column) plus the span_order invariant into
-ONE lazy DataFrame DAG:
+Plans the ten default constraints as ONE aggregate per grain
+(operators/grain.py), Deequ's scan-sharing design, instead of one DAG per
+constraint unioned together:
 
-    scan → posexplode (once) → {stats agg | anti-join | histogram agg}
-         ⊎ doc-level {permutation check | salted uniqueness}
-         → union verdicts / union violations → per-partition rollup
+    docs ⟕ broadcast(salted duplicate ids) → groupBy(partition_id)   doc grain
+    docs → posexplode (once) ⟕ catalog ids → groupBy(partition_id)  span grain
+      └→ keys (drift buckets + baseline grid, media_ref counts)
+           → groupBy(partition, grp, key) ⋈ broadcast(span totals)
+           → groupBy(partition_id)                                    keyed
+    doc grain ⟕ broadcast(span grain + keyed) → one wide row per partition
+      → inline(array(struct…)) verdicts | rollup | key-level violations
+    violations = tagged span pass ⊎ tagged doc pass ⊎ wide-row key rows
+
+Each operator module contributes its aggregate, verdict and violation-tag
+expressions once (``part()``); its standalone ``check()`` plans the same
+part alone. Verdict counts are conditional sums inside the grain
+aggregates, never counts of violation frames, so the verdict and the
+violation actions share only caches, not work.
+
+Exchange budget of the default verdict plan (tests/test_suite_plan_budget.py):
+seven shuffles — duplicate detection (2), doc grain, distinct catalog
+ids, span grain, keyed counts, keyed per-partition rows — and three scans
+of the source (doc grain, duplicate detection, span view); the
+|partitions|-row frames join by broadcast. Opt-in constraints
+(``placement``, ``freshness``) and expression rules plan as their own
+branches, unioned onto the fused output.
 
 This replaces the reference's eager file-materialized stage chain
 (end_to_end_prediction.py:618-667: each step writes .csv/.npy before the
-next starts) with a single Catalyst-optimized plan: stage boundaries exist
-only at shuffles, and the exploded span view is computed once and shared
-(Spark reuses the scan; with ``persist_exploded=True`` it is cached for the
-multi-consumer fan-out).
+next starts) with a single Catalyst-optimized plan whose stage boundaries
+are those shuffles.
 """
 
 from __future__ import annotations
@@ -29,6 +46,7 @@ from anomalydetection_spark.operators import (
     expression,
     freqitems,
     freshness,
+    grain,
     patterns,
     placement,
     referential,
@@ -75,10 +93,11 @@ class SuiteConfig:
     # optimization. Unknown sizes (no stats) count as big.
     persist_exploded: bool | None = None
     persist_exploded_max_bytes: int = 8 << 30
-    # persist each constraint's violation rows (MEMORY_AND_DISK) so the
-    # verdict aggregation and the violation sink share one computation —
-    # verdicts are *derived from* violations for uniqueness/referential, so
-    # without this the anti-join / dup-detection runs twice per action
+    # persist what the verdict and the violation actions both consume
+    # (MEMORY_AND_DISK): the duplicate-id set, the catalog ids when the
+    # span view is not cached, and the per-partition wide row — without it
+    # the violations action re-runs duplicate detection and every grain
+    # aggregate behind the key-level violation rows
     persist_violations: bool = True
     # deterministic sample rate (parts-per-million) applied to the emitted
     # VIOLATION rows only — verdict counts stay exact. At 10^12 docs a
@@ -94,9 +113,9 @@ class SuiteConfig:
     # promoting it to error)
     warn_constraints: tuple[str, ...] = ()
     # round-robin repartition of the exploded meta view before fan-out:
-    # one exchange whose shuffle files every constraint branch (and the
+    # one exchange whose shuffle files every span consumer (and the
     # violations job after the verdicts job) re-reads via stage reuse,
-    # instead of each branch re-scanning + re-exploding the source.
+    # instead of each re-scanning + re-exploding the source.
     # None = off (small inputs, where the extra shuffle costs more).
     repartition_exploded: int | None = None
 
@@ -107,6 +126,18 @@ class ValidationResult:
     violations: DataFrame    # VIOLATIONS_SCHEMA
     partition_rollup: DataFrame  # (partition_id, passed, violation_count, row_count)
     warn_constraints: tuple[str, ...] = ()  # report-only, non-gating (cfg echo)
+    # the caches this run's plan took (span view, shared lookups, wide row)
+    persisted: list[DataFrame] = field(default_factory=list)
+
+    def release(self) -> None:
+        """Unpersist exactly the caches this run took. Call it once the
+        sinks have consumed the frames; the frames stay valid afterwards
+        (a later action recomputes from the sources). Spark keys caches by
+        plan, so a concurrent run over the same inputs shares them and
+        recomputes after this call."""
+        for df in self.persisted:
+            df.unpersist()
+        self.persisted = []
 
     @property
     def global_verdicts(self) -> DataFrame:
@@ -190,11 +221,19 @@ def run_suite(
     ``expected_partitions``: partition list the volume constraint emits
     n_docs=0 FAIL rows for when absent (operators/volume.py) — the resume
     planner's metadata partition list plugs in here.
+
+    The caches the plan takes are listed on the result; call
+    ``ValidationResult.release()`` once its frames have been consumed.
     """
     selected = tuple(constraints) if constraints is not None else ALL_CONSTRAINTS
-    unknown = set(selected) - set(ALL_CONSTRAINTS) - set(OPTIONAL_CONSTRAINTS)
+    known = set(ALL_CONSTRAINTS) | set(OPTIONAL_CONSTRAINTS)
+    unknown = set(selected) - known
     if unknown:
         raise ValueError(f"unknown constraints: {sorted(unknown)}")
+    # a bad severity name is a config error: fail before planning anything
+    bad = set(cfg.warn_constraints) - known - {r.constraint for r in cfg.expressions}
+    if bad:
+        raise ValueError(f"unknown warn constraints: {sorted(bad)}")
 
     exploded = reassembly.explode_spans_meta(docs)
     if cfg.repartition_exploded:
@@ -207,85 +246,84 @@ def run_suite(
     persist_ex = cfg.persist_exploded
     if persist_ex is None:
         persist_ex = plan_size_bytes(docs) <= cfg.persist_exploded_max_bytes
-    if persist_ex:
-        exploded = exploded.persist()
-
-    from pyspark.storagelevel import StorageLevel
-
-    def _maybe_persist(pair):
-        if not cfg.persist_violations:
-            return pair
-        return pair[0], pair[1].persist(StorageLevel.MEMORY_AND_DISK)
 
     builders = {
         # structural contract check: reads only df.schema (driver-side
-        # metadata, zero scans); the verdict fan-out uses the metadata
-        # partition list when given
-        "schema": lambda: schema_check.check(
-            docs,
-            cfg.expected_schema or _default_contract(),
-            cfg.schema,
-            expected_partitions,
+        # metadata); its rows cover the metadata partition list when given
+        "schema": lambda: schema_check.part(
+            docs.schema, cfg.expected_schema or _default_contract(), cfg.schema
         ),
-        # stats/span_order persist their own violation frames when sharing
-        # is on: their verdicts then DERIVE counts from those frames, so the
-        # violations action reuses them instead of re-scanning the span
-        # table (one fewer pass over the text leaf per run)
-        "column_stats": lambda: stats.check(
-            docs, exploded, cfg.stats, share_violations=cfg.persist_violations
+        "column_stats": lambda: stats.part(cfg.stats),
+        "uniqueness": lambda: uniqueness.part(
+            uniqueness_scope if uniqueness_scope is not None else docs, cfg.n_salts
         ),
-        "uniqueness": lambda: _maybe_persist(
-            uniqueness.check(docs, n_salts=cfg.n_salts, scope_docs=uniqueness_scope)
-        ),
-        "referential": lambda: _maybe_persist(
-            referential.check(exploded, media, broadcast=cfg.broadcast_media)
-        ),
-        # intermediate count-aggregate caches only when the exploded view
-        # is NOT cached: with the view cached (small inputs) re-deriving a
-        # KB-sized agg from it beats another materialization barrier; with
-        # lazy re-scans (big inputs) those caches are what hold each check
-        # to one scan
-        "distribution_drift": lambda: drift.check(
-            exploded, baseline_hist, cfg.drift, persist_counts=not persist_ex
-        ),
-        "span_order": lambda: reassembly.check(
-            docs, share_violations=cfg.persist_violations
-        ),
-        "frequent_items": lambda: _maybe_persist(
-            freqitems.check(exploded, cfg.freq, persist_counts=not persist_ex)
-        ),
-        "pattern": lambda: _maybe_persist(patterns.pattern_check(exploded, cfg.pattern)),
-        "cross_column": lambda: _maybe_persist(patterns.cross_column_check(exploded)),
-        # doc-level count agg over the partition column alone — never
-        # touches the span table; violations are |partitions|-bounded
-        "volume": lambda: volume.check(docs, cfg.volume, expected_partitions),
-        # opt-in: map-only partition-transform consistency (needs cfg.placement.expr)
-        "placement": lambda: _maybe_persist(placement.check(docs, cfg.placement)),
-        # opt-in: event-time recency bounds (needs cfg.freshness ts_expr + as_of)
-        "freshness": lambda: _maybe_persist(freshness.check(docs, cfg.freshness)),
+        "referential": lambda: referential.part(media, broadcast=cfg.broadcast_media),
+        "distribution_drift": lambda: drift.part(baseline_hist, cfg.drift),
+        "span_order": reassembly.part,
+        "frequent_items": lambda: freqitems.part(cfg.freq),
+        "pattern": lambda: patterns.pattern_part(cfg.pattern),
+        "cross_column": patterns.cross_column_part,
+        "volume": lambda: volume.part(cfg.volume),
     }
-    # the two per-span predicate constraints fuse into ONE scan (tagged
-    # violation array + shared totals, operators/patterns.fused_check) when
-    # both are selected and violation sharing is on — row-identical output,
-    # half the span-table passes for this pair
-    if cfg.persist_violations and {"pattern", "cross_column"} <= set(selected):
-        fused = patterns.fused_check(exploded, cfg.pattern, persist=True)
-        builders["pattern"] = lambda: fused["pattern"]
-        builders["cross_column"] = lambda: fused["cross_column"]
-    all_pairs = [
-        builders[name]()
-        for name in (*ALL_CONSTRAINTS, *OPTIONAL_CONSTRAINTS)
-        if name in selected
-    ]
+    parts = [builders[name]() for name in ALL_CONSTRAINTS if name in selected]
+    outputs, rollups, persisted = [], [], []
+    if parts:
+        fused = grain.fuse(
+            docs,
+            exploded,
+            parts,
+            expected_partitions,
+            persist_spans=persist_ex,
+            persist_shared=cfg.persist_violations,
+            warn_constraints=tuple(cfg.warn_constraints),
+        )
+        outputs.append((fused.verdicts, fused.violations))
+        rollups.append(fused.rollup)
+        persisted += fused.persisted
+
+    # opt-in constraints and expression rules plan as their own branches
+    branches = []
+    if "placement" in selected:
+        # map-only partition-transform consistency (needs cfg.placement.expr)
+        branches.append(placement.check(docs, cfg.placement))
+    if "freshness" in selected:
+        # event-time recency bounds (needs cfg.freshness ts_expr + as_of)
+        branches.append(freshness.check(docs, cfg.freshness))
     # config-driven opt-in (like warn_constraints): present rules always
     # evaluate — there is no meaningful default rule set to select from
     if cfg.expressions:
-        all_pairs.append(_maybe_persist(expression.check(docs, cfg.expressions)))
-    verdicts = reduce(DataFrame.unionByName, [p[0] for p in all_pairs])
-    violations = reduce(DataFrame.unionByName, [p[1] for p in all_pairs])
+        branches.append(expression.check(docs, cfg.expressions))
+    # warn-level constraints report but don't gate the rollup's pass bit
+    gating = F.col("passed")
+    if cfg.warn_constraints:
+        gating = gating | F.col("constraint").isin(*cfg.warn_constraints)
+    from pyspark.storagelevel import StorageLevel
+
+    for v, x in branches:
+        if cfg.persist_violations:
+            x = x.persist(StorageLevel.MEMORY_AND_DISK)
+            persisted.append(x)
+        outputs.append((v, x))
+        rollups.append(
+            v.select("partition_id", gating.alias("passed"), "violation_count", "row_count")
+        )
+
+    verdicts = reduce(DataFrame.unionByName, [v for v, _ in outputs])
+    violations = reduce(DataFrame.unionByName, [x for _, x in outputs])
+    rollup = rollups[0]
+    if branches:
+        rollup = (
+            reduce(DataFrame.unionByName, rollups)
+            .groupBy("partition_id")
+            .agg(
+                F.bool_and("passed").alias("passed"),
+                F.sum("violation_count").cast("long").alias("violation_count"),
+                F.max("row_count").cast("long").alias("row_count"),
+            )
+        )
     if cfg.violation_sample_ppm is not None:
-        # applied on TOP of the (persisted) per-constraint frames: verdict
-        # counts derive from the unsampled frames, so totals stay exact
+        # applied on TOP of the violation rows: verdict counts are
+        # conditional sums over the unsampled data, so totals stay exact
         # while the emitted rows are a deterministic, retry-stable sample.
         # doc-keyed rows hash on (doc_id, constraint, pos); key-level rows
         # (frequent_items hot keys, volume/schema facts) hash their detail.
@@ -297,33 +335,12 @@ def run_suite(
         violations = violations.filter(
             F.pmod(key, F.lit(1_000_000)) < F.lit(int(cfg.violation_sample_ppm))
         )
-
-    # warn-level constraints report but don't gate: the rollup's pass bit
-    # (and therefore the manifest's done-state quality and the CLI's exit
-    # summary) considers only error-level verdicts
-    gating = F.col("passed")
-    if cfg.warn_constraints:
-        bad = (
-            set(cfg.warn_constraints)
-            - set(ALL_CONSTRAINTS)
-            - set(OPTIONAL_CONSTRAINTS)
-            - {r.constraint for r in cfg.expressions}
-        )
-        if bad:
-            raise ValueError(f"unknown warn constraints: {sorted(bad)}")
-        gating = F.when(
-            F.col("constraint").isin(*cfg.warn_constraints), F.lit(True)
-        ).otherwise(F.col("passed"))
-    rollup = verdicts.groupBy("partition_id").agg(
-        F.bool_and(gating).alias("passed"),
-        F.sum("violation_count").cast("long").alias("violation_count"),
-        F.max("row_count").cast("long").alias("row_count"),
-    )
     return ValidationResult(
         verdicts=verdicts,
         violations=violations,
         partition_rollup=rollup,
         warn_constraints=tuple(cfg.warn_constraints),
+        persisted=persisted,
     )
 
 

@@ -192,6 +192,8 @@ def write_audit_publish(
         uniqueness_scope=uniqueness_scope, constraints=constraints,
     )
     verdicts = [r.asDict() for r in result.global_verdicts.collect()]
+    # the returned violations frame stays lazy: it recomputes on demand
+    result.release()
     gating_failures = [
         v for v in verdicts if not v["passed"] and v["severity"] == "error"
     ]

@@ -9,6 +9,10 @@ Scale rationale (tested on local[32], designed for 1000-executor clusters):
   overridden by AQE's coalescing from a high initial number.
 - session timezone pinned to UTC so results are comparable with the
   DuckDB oracle (duckdb timestamps are UTC-naive).
+- DataFrame call-site capture off: with it on, every ``pyspark.sql.functions``
+  call sets and clears a JVM-side origin (about five extra py4j round
+  trips per column expression), which doubles the driver time to build
+  the suite's plan; errors still carry the SQL expression context.
 """
 
 from __future__ import annotations
@@ -50,6 +54,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -146,6 +146,9 @@ def start_validation_stream(
             append_metrics_history(
                 spark, out_dir, f"stream-batch-{batch_id}", rollup_rows
             )
+        # a long-running stream must not accumulate one batch's caches per
+        # micro-batch
+        res.release()
 
     return (
         stream.writeStream.foreachBatch(process)

@@ -470,6 +470,7 @@ def main(argv: list[str] | None = None) -> int:
         vd = verdicts
         n_viol = res.violations.count()
     fields, print_verdicts = _verdict_report(vd, args.max_verdict_rows)
+    res.release()
     elapsed = time.time() - t0
 
     n_docs = docs.count()

@@ -47,7 +47,8 @@ def test_referential_uses_broadcast_join(spark):
     exploded = reassembly.explode_spans_meta(docs)
     _, violations = referential.check(exploded, media)
     plan = _formatted(spark, violations)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    # the catalog-membership flag: a broadcast left join onto the span view
+    assert "BroadcastHashJoin LeftOuter" in plan
     assert "SortMergeJoin" not in plan
 
 

@@ -250,6 +250,40 @@ def test_warn_constraints_validated(spark, baseline):
         ).partition_rollup.collect()
 
 
+def test_warn_constraints_fail_before_planning(spark, baseline):
+    """A bad severity name is rejected before any plan is built: this
+    frame has none of the document columns, so planning it would raise
+    an AnalysisException instead."""
+    not_docs = spark.createDataFrame([(1,)], "x int")
+    with pytest.raises(ValueError, match="unknown warn constraints"):
+        run_suite(
+            not_docs, not_docs, baseline, SuiteConfig(warn_constraints=("uniquness",))
+        )
+
+
+def test_release_unpersists_what_the_run_cached(spark, baseline):
+    """Each run lists the caches it takes; release() drops exactly those,
+    so repeated runs (a stream's micro-batches, the manifest loop) do not
+    accumulate persisted RDDs — and the released frames stay valid."""
+    docs = generate_documents(spark, CFG)
+    media = generate_media_assets(spark, CFG)
+    # earlier runs over the same inputs left caches the new run would reuse
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc  # noqa: SLF001
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        res = run_suite(docs, media, baseline)
+        verdicts = res.verdicts.collect()
+        n_viol = res.violations.count()
+        res.partition_rollup.collect()
+        assert jsc.getPersistentRDDs().size() > before
+        res.release()
+        assert jsc.getPersistentRDDs().size() == before
+    # after release the frames recompute from their sources
+    assert sorted(map(tuple, res.verdicts.collect())) == sorted(map(tuple, verdicts))
+    assert res.violations.count() == n_viol
+
+
 def test_declarative_severity(spark, baseline):
     from anomalydetection_spark.plans.declarative import compile_spec, run_declarative
 

@@ -50,6 +50,58 @@ def test_all_suite_configs_equivalent(spark, inputs):
         assert _key(run_suite(docs, media, baseline, cfg)) == golden, cfg
 
 
+def _canon(v):
+    """Floats to 10 significant digits: the fused and standalone plans
+    sum in different orders."""
+    if isinstance(v, float):
+        return f"{v:.10g}"
+    if isinstance(v, dict):
+        return tuple(sorted((k, _canon(x)) for k, x in v.items()))
+    return v
+
+
+def _rows(df):
+    return sorted(tuple(_canon(r[c]) for c in df.columns) for r in df.collect())
+
+
+def test_suite_matches_standalone_checks(spark, inputs):
+    """run_suite's verdict rows — metrics maps included — and violation
+    rows equal each operator's standalone check(), constraint by
+    constraint: the fused plan changes how rows are computed, never
+    which rows come out."""
+    from anomalydetection_spark.operators import (
+        freqitems,
+        patterns,
+        referential,
+        schema_check,
+        uniqueness,
+        volume,
+    )
+    from anomalydetection_spark.plans.suite import ALL_CONSTRAINTS, _default_contract
+
+    docs, media, baseline = inputs
+    exploded = reassembly.explode_spans_meta(docs)
+    standalone = {
+        "schema": lambda: schema_check.check(docs, _default_contract()),
+        "column_stats": lambda: stats.check(docs, exploded),
+        "uniqueness": lambda: uniqueness.check(docs),
+        "referential": lambda: referential.check(exploded, media),
+        "distribution_drift": lambda: drift.check(exploded, baseline),
+        "span_order": lambda: reassembly.check(docs),
+        "frequent_items": lambda: freqitems.check(exploded),
+        "pattern": lambda: patterns.pattern_check(exploded),
+        "cross_column": lambda: patterns.cross_column_check(exploded),
+        "volume": lambda: volume.check(docs),
+    }
+    assert set(standalone) == set(ALL_CONSTRAINTS)
+    res = run_suite(docs, media, baseline)
+    for c, check in standalone.items():
+        verdicts, violations = check()
+        assert _rows(res.verdicts.filter(F.col("constraint") == c)) == _rows(verdicts), c
+        assert _rows(res.violations.filter(F.col("constraint") == c)) == _rows(violations), c
+    res.release()
+
+
 def test_approx_quantile_path(spark, inputs):
     """exact_quantiles=False (the 10^12-row path): percentile_approx stats
     stay within tolerance of the exact ones; pass/fail identical."""
